@@ -102,6 +102,9 @@ object GraphOps {
       .repartition(loopParts, col("b"))
       .dropDuplicates("a", "b")
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // released on every exit — converged, empty, unconverged or failed: a
+    // thrown round must not leave a corpus-scale edge table pinned
+    try {
     sym.count() // materialize under AQE, BEFORE the toggle below
 
     // AQE off for the propagation rounds ONLY (restored on exit): every
@@ -186,7 +189,6 @@ object GraphOps {
       else converged = changed.getLong(0) == 0L
       iter += 1
     }
-    sym.unpersist()
     // the final frame's checkpoint blocks are released on BOTH abnormal
     // exits: nothing downstream will read them, and the throw path would
     // otherwise leave a corpus-scale label frame pinned in the session's
@@ -209,6 +211,7 @@ object GraphOps {
     }
     labels.select("node", "component")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    } finally sym.unpersist()
   }
 
   /** Dedup groups from near-dup pairs: `(doc, group, is_canonical)` for

@@ -34,12 +34,13 @@ import java.nio.charset.StandardCharsets
   * wrong skip. Supported column types: byte/short/int/long, string,
   * date — the point-lookup key shapes.
   *
-  * Scale shape (100 TB): build cost is one distributed pass over the
-  * COMMIT's files (partial blooms per task, merged per file on the
-  * driver — `fpp`-sized, ~1.2 MB per million expected items); probe
-  * cost is one sidecar read per min/max-surviving candidate file,
-  * driver-side, the same O(candidates) order as the manifest pruning
-  * that precedes it. */
+  * Scale shape (100 TB): build cost is one job per indexed column over
+  * the COMMIT's files (partial blooms per task, merged per file by a
+  * `reduceByKey` whose tasks write the sidecars — `fpp`-sized, ~1.2 MB
+  * per million expected items; the driver only sees the written rel
+  * paths, never bloom bytes); probe cost is one sidecar read per
+  * min/max-surviving candidate file, driver-side, the same
+  * O(candidates) order as the manifest pruning that precedes it. */
 final case class BloomIndexConfig(fpp: Double, expectedItemsPerFile: Long)
 
 object BloomIndex {
@@ -103,9 +104,12 @@ object BloomIndex {
       .digest(s.getBytes(StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
 
   /** Build sidecars for `files` × the supported columns of `indexes` in
-    * one distributed pass per column: partial blooms per task (files may
-    * split across tasks), merged per file on the driver, then written.
-    * Files whose sidecar already exists are skipped when `onlyMissing`. */
+    * ONE job per column: executors build partial blooms per file (files
+    * may split across tasks), `reduceByKey` merges each file's partials,
+    * and the reduce tasks write the merged sidecars, returning only the
+    * rel paths they wrote. The driver then adds sidecars for files that
+    * yielded no values. Files whose sidecar already exists are skipped
+    * when `onlyMissing`. */
   private[tables] def build(
       spark: SparkSession,
       fs: FileSystem,
@@ -124,6 +128,10 @@ object BloomIndex {
     val existing: Set[String] =
       if (!onlyMissing || !fs.exists(bloomDir)) Set.empty
       else fs.listStatus(bloomDir).map(_.getPath.getName).toSet
+    fs.mkdirs(bloomDir)
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val dirStr = bloomDir.toString
     for ((c, dt, cfg) <- cols) {
       val todo = files.filterNot(f =>
         onlyMissing && existing.contains(sidecarName(f.path, c)))
@@ -132,50 +140,41 @@ object BloomIndex {
         val paths = todo.map(f => new Path(root, f.path).toString)
         val items = cfg.expectedItemsPerFile
         val fpp = cfg.fpp
-        val sp = spark
-        import sp.implicits._
-        val partials = spark.read.schema(schema).parquet(paths: _*)
+        // shipped to the tasks: O(files) short strings, never blooms
+        val todoPaths = todo.map(_.path).toSet
+        val todoUris = uriToRel.filter { case (_, r) => todoPaths(r) }
+        val scan = spark.read.schema(schema).parquet(paths: _*)
           .select(input_file_name().as("__f"), canonical(c, dt).as("__v"))
           .filter(col("__v").isNotNull)
-          .mapPartitions { it =>
-            val blooms = scala.collection.mutable.Map.empty[String, BloomFilter]
-            it.foreach { row =>
-              val b = blooms.getOrElseUpdate(row.getString(0),
-                BloomFilter.create(items, fpp))
-              if (isLong) b.putLong(row.getLong(1))
-              else b.putString(row.getString(1))
-            }
-            blooms.iterator.map { case (f, b) =>
-              val bos = new java.io.ByteArrayOutputStream()
-              b.writeTo(bos)
-              (f, bos.toByteArray)
-            }
+        val partials = scan.queryExecution.toRdd.mapPartitions { it =>
+          val blooms = scala.collection.mutable.Map.empty[String, BloomFilter]
+          it.foreach { row =>
+            val b = blooms.getOrElseUpdate(row.getUTF8String(0).toString,
+              BloomFilter.create(items, fpp))
+            if (isLong) b.putLong(row.getLong(1))
+            else b.putString(row.getUTF8String(1).toString)
           }
-        fs.mkdirs(bloomDir)
-        // stream partials to the driver partition-by-partition and merge
-        // incrementally — driver memory stays O(one partition's blobs),
-        // never O(files), so a million-file backfill cannot OOM the
-        // driver. A file's partials may span partitions (identical
-        // (items, fpp) params make them mergeable); the first partial of
-        // this build overwrites any stale sidecar, later ones merge in.
-        val written = scala.collection.mutable.Set.empty[String]
-        partials.toLocalIterator().forEachRemaining { case (uri, bytes) =>
-          uriToRel.get(uri).foreach { rel =>
-            val p = new Path(bloomDir, sidecarName(rel, c))
-            val fresh = BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(bytes))
-            val merged =
-              if (!written.contains(rel)) fresh
-              else {
-                val in = fs.open(p)
-                val prev = try BloomFilter.readFrom(in) finally in.close()
-                prev.mergeInPlace(fresh)
-              }
-            val out = fs.create(p, true)
-            try merged.writeTo(out) finally out.close()
-            written += rel
-          }
+          blooms.iterator.map { case (f, b) => f -> toBytes(b) }
         }
+        // identical (items, fpp) params make every partial of one file
+        // mergeable; the merged filter's bytes are those a driver-side
+        // merge of the same partials writes
+        val written = partials
+          .reduceByKey((a, b) =>
+            toBytes(BloomFilter.readFrom(a).mergeInPlace(BloomFilter.readFrom(b))),
+            math.max(1, math.min(todo.size, partials.getNumPartitions)))
+          .mapPartitions { it =>
+            val dir = new Path(dirStr)
+            val tfs = dir.getFileSystem(conf.value)
+            it.flatMap { case (uri, bytes) =>
+              todoUris.get(uri).map { rel =>
+                val out = tfs.create(new Path(dir, sidecarName(rel, c)), true)
+                try out.write(bytes) finally out.close()
+                rel
+              }
+            }
+          }
+          .collect().toSet
         // an empty file (no rows / all nulls) still gets a sidecar, so
         // probes can skip it outright
         todo.filterNot(f => written.contains(f.path)).foreach { f =>
@@ -184,6 +183,12 @@ object BloomIndex {
         }
       }
     }
+  }
+
+  private def toBytes(b: BloomFilter): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    b.writeTo(bos)
+    bos.toByteArray
   }
 
   /** Executor-side probe for LARGE candidate sets: at ~1M min/max

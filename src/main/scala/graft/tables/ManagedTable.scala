@@ -2213,12 +2213,6 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         // commitDelta succeeds) — without the sweep, a writer that loses
         // a cross-process race beyond the retry budget leaks its files
         // until vacuum
-        def dropWritten(): Unit =
-          try newFiles.headOption.foreach { f =>
-            val segs = f.path.split('/')
-            if (segs.length >= 2 && segs(0) == dataDir.getName)
-              fs.delete(new Path(root, s"${segs(0)}/${segs(1)}"), true)
-          } catch { case scala.util.control.NonFatal(_) => () }
         var base = m
         var attempt = 0
         var committed = false
@@ -2237,7 +2231,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
               // a txn-guard/anchor-fence conflict is permanent (recorded
               // txns never regress) — a rebase cannot clear it
               if (!e.retryable || attempt > ManagedTable.MaxAppendRetries) {
-                dropWritten(); throw e
+                dropCommitDir(newFiles); throw e
               }
               val cur = requireManifest // the winner's head (pointer moved)
               if (cur.schemaJson != base.schemaJson ||
@@ -2245,7 +2239,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
                   cur.constraints != base.constraints ||
                   cur.generated != base.generated ||
                   cur.properties != base.properties) {
-                dropWritten(); throw e
+                dropCommitDir(newFiles); throw e
               }
               base = cur // an orphan record keeps colliding → attempts exhaust
           }
@@ -3011,15 +3005,19 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       // future assignments are the user's to reconcile via syncIdentity
       val byDefault = m.properties
         .get(s"graft.identity.$name.byDefault").contains("true")
+      // the probes and the id assignment read `unobserved` frames: only
+      // the write may report an observation riding `df`
       if (has && !keepExisting && !byDefault &&
-          out.filter(col(s"`$name`").isNotNull).limit(1).count() > 0)
+          ObservedCounts.unobserved(out)
+            .filter(col(s"`$name`").isNotNull).limit(1).count() > 0)
         throw new ConstraintViolationException(
           s"identity column '$name' is GENERATED ALWAYS on $rootPath — " +
             s"omit it (or write NULL) in '$operation'; the engine assigns")
       val withNullCol =
         if (has) out
         else out.withColumn(name, lit(null).cast("bigint"))
-      val needsIds = withNullCol.filter(col(s"`$name`").isNull)
+      val needsIds = ObservedCounts.unobserved(withNullCol)
+        .filter(col(s"`$name`").isNull)
       val cnt = needsIds.count()
       if (cnt == 0L) { out = withNullCol }
       else {
@@ -3142,7 +3140,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       }
     }
     if (checks.nonEmpty) {
-      val viol = out.filter(checks.map(_._2).reduce(_ || _))
+      val viol = ObservedCounts.unobserved(out)
+        .filter(checks.map(_._2).reduce(_ || _))
         .select(checks.map { case (n, c) => c.as(n) }: _*)
         .limit(1).collect()
       if (viol.nonEmpty) {
@@ -3174,7 +3173,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     if (cs.nonEmpty && !ConstraintExemptOps.exists(operation.startsWith)) {
       val flags = cs.toSeq.map { case (n, e) =>
         n -> !coalesce(expr(e), lit(true)) }
-      val viol = df.filter(flags.map(_._2).reduce(_ || _))
+      val viol = ObservedCounts.unobserved(df)
+        .filter(flags.map(_._2).reduce(_ || _))
         .select(flags.map { case (n, c) => c.as(n) }: _*)
         .limit(1).collect()
       if (viol.nonEmpty) {
@@ -3677,7 +3677,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       df: DataFrame,
       operation: String = "replaceFiles",
       txn: Option[Txn] = None,
-      dmlRebasePredicate: Option[String] = None): Unit = withWriteLock {
+      dmlRebasePredicate: Option[String] = None,
+      writtenRows: Option[() => Long] = None): Unit = withWriteLock {
     val m = requireManifest
     // engine-built rewrite content (merge updates, DML images): existing
     // identity values pass through, NULLs (merge inserts) allocate;
@@ -3691,6 +3692,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     enforceConstraints(d, m.constraints, operation)
     val cmx = extendMapping(m.columnMapping, logicalSchema(d))
     val newFiles = writeCommit(d, m.partitionColumns, cmx)
+    checkWrittenRows(newFiles, writtenRows, operation)
     commitReplaceWithRebase(m, logicalSchema(d).json, operation, newFiles,
       removePaths, txn, Some(cmx), propsOv, dmlRebasePredicate)
     maybeAutoCompact()
@@ -3709,12 +3711,6 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       mappingOverride: Option[Option[ColumnMapping]],
       propsOv: Option[Map[String, String]],
       rebasePredicate: Option[String]): Unit = {
-    def dropWritten(): Unit =
-      try newFiles.headOption.foreach { f =>
-        val segs = f.path.split('/')
-        if (segs.length >= 2 && segs(0) == dataDir.getName)
-          fs.delete(new Path(root, s"${segs(0)}/${segs(1)}"), true)
-      } catch { case scala.util.control.NonFatal(_) => () }
     val removedByPath = {
       val keep = removePaths.toSet
       m.files.filter(f => keep.contains(f.path)).map(f => f.path -> f).toMap
@@ -3736,7 +3732,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
           // pre-race head — a rebase would clobber the winner's; surface
           if (!e.retryable || attempt > ManagedTable.MaxAppendRetries ||
               rebasePredicate.isEmpty || propsOv.isDefined) {
-            dropWritten(); throw e
+            dropCommitDir(newFiles); throw e
           }
           val cur = requireManifest // the winner's head (pointer moved)
           val byPath = cur.files.map(f => f.path -> f).toMap
@@ -3758,11 +3754,42 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
               cur.columnMapping == b.columnMapping &&
               cmpProps(cur.properties) == cmpProps(b.properties)
           if (!victimsUntouched || !addsDisjoint || !metaUnchanged) {
-            dropWritten(); throw e
+            dropCommitDir(newFiles); throw e
           }
           b = cur // an orphan record keeps colliding → attempts exhaust
       }
   }
+
+  /** Sweep the fresh commit dir holding `newFiles` (a commit that will
+    * not publish them); best effort, the dir is invisible either way. */
+  private def dropCommitDir(newFiles: Seq[TableFile]): Unit =
+    try newFiles.headOption.foreach { f =>
+      val segs = f.path.split('/')
+      if (segs.length >= 2 && segs(0) == dataDir.getName)
+        fs.delete(new Path(root, s"${segs(0)}/${segs(1)}"), true)
+    } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** Exactness gate for a commit whose writer observed its own output
+    * ([[ObservedCounts]]): before the pointer swap, the observed row
+    * total must equal the row counts the footer-stats pass read for the
+    * files just written. A mismatch — a task re-run folded in twice, a
+    * plan that evaluated differently than it counted — fails the commit
+    * with nothing published. A file whose footer yielded no row count
+    * cannot be compared, and skips the gate. */
+  private def checkWrittenRows(newFiles: Seq[TableFile],
+      writtenRows: Option[() => Long], operation: String): Unit =
+    writtenRows.foreach { observed =>
+      if (newFiles.forall(_.rows.isDefined)) {
+        val inFiles = newFiles.flatMap(_.rows).sum
+        val expected = observed()
+        if (inFiles != expected) {
+          dropCommitDir(newFiles)
+          throw new MetadataException(
+            s"$operation on $rootPath: the write observed $expected rows " +
+              s"but its files hold $inFiles; nothing was committed")
+        }
+      }
+    }
 
   /** Content-preserving maintenance commit ([[compact]], [[compactSmall]],
     * [[zorder]], [[purgeDeletionVectors]]): atomically replace exactly
@@ -3866,7 +3893,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       replacePaths: Seq[String],
       content: DataFrame,
       operation: String = "merge",
-      txn: Option[Txn] = None): Unit = withWriteLock {
+      txn: Option[Txn] = None,
+      writtenRows: Option[() => Long] = None): Unit = withWriteLock {
     val m = requireManifest
     // merge-built content: identity NULLs (inserts) allocate, generated
     // columns recompute (see replaceFiles)
@@ -3895,7 +3923,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         f.copy(dv = Some(name), dvRows = Some(dead)) }
     }
     val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    adds ++= writeCommit(d, m.partitionColumns, cmx)
+    val written = writeCommit(d, m.partitionColumns, cmx)
+    checkWrittenRows(written, writtenRows, operation)
+    adds ++= written
     commitDelta(logicalSchema(d).json, m.partitionColumns, operation,
       base = Some(m), adds = adds,
       removes = dropPaths ++ replacePaths ++ dvUpdates.map(_._1.path),
@@ -4091,7 +4121,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       partitions: Option[Seq[Map[String, String]]],
       df: DataFrame,
       operation: String = "replacePartitions",
-      txn: Option[Txn] = None): Unit = withWriteLock {
+      txn: Option[Txn] = None,
+      writtenRows: Option[() => Long] = None): Unit = withWriteLock {
     val m = requireManifest
     val (withIds, propsOv) =
       applyIdentity(df, m, operation, keepExisting = true)
@@ -4101,6 +4132,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     enforceConstraints(d, m.constraints, operation)
     val cmx = extendMapping(m.columnMapping, logicalSchema(d))
     val newFiles = writeCommit(d, m.partitionColumns, cmx)
+    checkWrittenRows(newFiles, writtenRows, operation)
     val removed = partitions match {
       case None => m.files
       case Some(ps) =>

@@ -21,9 +21,14 @@ import org.apache.spark.storage.StorageLevel
   * {{{
   *   target (partition-pruned) FULL OUTER JOIN source ON <condition>
   *   → per-column CASE chain picks target/source/override value
-  *   → action tag column → metrics (single aggregate)
+  *   → action tag column → per-tag counters observed on the write job
   *   → atomic replacePartitions commit
   * }}}
+  *
+  * Metrics cost no job of their own on either path: the counts ride the
+  * commit's write ([[ObservedCounts]]), and the commit checks the
+  * observed row total against its new files' footer row counts before
+  * the pointer swap.
   *
   * Scale behavior: joins hash on the (already hashed, uniformly
   * distributed) PK — no skew by construction. Only partitions named in
@@ -167,10 +172,10 @@ final class MergeBuilder private[tables] (
 
   /** A pruned scope small enough that the keyed path's touch-detection
     * probe cannot pay for itself: every scope file would be cheap to
-    * rewrite outright, so the single-phase generic resolve (one action
-    * materializes the persisted resolve for metrics, the write re-reads
-    * the cache) beats probe + selective rewrite + insert anti-join by a
-    * whole action on the commit-latency path. Sized from MANIFEST bytes
+    * rewrite outright, so the single-phase generic resolve (one write job
+    * resolves, counts and writes the scope, nothing persisted) beats
+    * probe + selective rewrite + insert anti-join by a whole action on
+    * the commit-latency path. Sized from MANIFEST bytes
     * only — an entry without a recorded size disqualifies (conservative:
     * stay file-granular). DV tables keep the keyed path (its masking
     * avoids the rewrite entirely, strictly better). At 100 TB the bound
@@ -203,9 +208,10 @@ final class MergeBuilder private[tables] (
     * detection, once in the rewrite — so a nondeterministic condition
     * (`rand()`, `current_timestamp()`) could flag a file untouched in phase
     * 1 yet resolve a row as updated in phase 2, silently losing the update.
-    * Such merges take the single-pass generic path, where the resolved
-    * frame is persisted and written directly (self-consistent by
-    * construction). Determinism is checked on the ANALYZED expressions:
+    * Such merges take the single-pass generic path, where each condition
+    * is evaluated once per row and the write itself counts the actions
+    * (self-consistent by construction). Determinism is checked on the
+    * ANALYZED expressions:
     * an unresolved `rand()` is just an `UnresolvedFunction` whose
     * `deterministic` defaults to true, so the conditions are resolved
     * against an empty two-sided join frame first (analysis only, no jobs). */
@@ -301,7 +307,6 @@ final class MergeBuilder private[tables] (
       .withColumn(TRowId, monotonically_increasing_id())
       .alias("target")
     val s = source.withColumn(SFlag, lit(true)).alias("source")
-    val joined = t.join(s, expr(condition), "full_outer")
 
     val isMatched = col(TFlag).isNotNull && col(SFlag).isNotNull
     val sourceOnly = col(SFlag).isNotNull && col(TFlag).isNull
@@ -312,8 +317,6 @@ final class MergeBuilder private[tables] (
       case NotMatched         => sourceOnly
       case NotMatchedBySource => targetOnly
     }
-    def clauseCond(c: Clause): Column =
-      c.cond.map(e => scope(c.kind) && expr(e)).getOrElse(scope(c.kind))
     def tag(i: Int, c: Clause): String = c.kind match {
       case Matched            => s"m$i"
       case NotMatched         => s"nm$i"
@@ -321,10 +324,21 @@ final class MergeBuilder private[tables] (
     }
 
     val indexed = clauses.zipWithIndex
+    // each clause's scope+condition is evaluated ONCE per row, into a
+    // column the action tag and every output value read: a
+    // nondeterministic condition (`rand()`) then tags a row exactly the
+    // way it writes it (each `expr` parse would draw on its own)
+    val joined = t.join(s, expr(condition), "full_outer")
+      .select(col("*") +: indexed.map { case (c, i) =>
+        c.cond.map(e => scope(c.kind) && expr(e)).getOrElse(scope(c.kind))
+          .as(s"$CondPrefix$i")
+      }: _*)
+    def clauseCond(i: Int): Column = col(s"$CondPrefix$i")
+
     // action tag: first clause whose scope+condition holds; else keep/drop
     val actionCol = indexed.foldRight(
       when(sourceOnly, lit(DropTag)).otherwise(lit(UnchangedTag))) {
-      case ((c, i), rest) => when(clauseCond(c), lit(tagFor(c, tag(i, c)))).otherwise(rest)
+      case ((c, i), rest) => when(clauseCond(i), lit(tagFor(c, tag(i, c)))).otherwise(rest)
     }
 
     // per-column value: walk the same clause chain
@@ -345,7 +359,7 @@ final class MergeBuilder private[tables] (
     }
     val outCols = targetCols.map { name =>
       indexed.foldRight(col(s"target.`$name`")) { case ((c, i), rest) =>
-        when(clauseCond(c), valueFor(c, name)).otherwise(rest)
+        when(clauseCond(i), valueFor(c, name)).otherwise(rest)
       }.as(name)
     }
 
@@ -361,28 +375,45 @@ final class MergeBuilder private[tables] (
     val resolved = joined
       .select(outCols ++ matCarry ++ Seq(actionCol.as(ActionCol),
         when(col(SFlag).isNotNull, col(TRowId)).as(TRowId)): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Delta contract: multiple source rows matching one target row is an
-      // error, not silent duplication (skipped when the caller asserted
-      // key-unique sources — the keyed path's same contract)
-      if (!sourceKeysUnique) {
-        val multi = resolved.filter(col(TRowId).isNotNull)
-          .groupBy(TRowId).count().filter(col("count") > 1).limit(1).count()
-        if (multi > 0)
-          throw new graft.metadata.MetadataException(
-            "MERGE source has multiple rows matching one target row")
-      }
-      val counts = resolved.groupBy(ActionCol).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val kept = resolved
-        .filter(col(ActionCol) =!= DropTag && !col(ActionCol).startsWith(DeletePrefix))
-        .drop(ActionCol, TRowId)
-      table.replacePartitions(pruned.filter(_ => m.partitionColumns.nonEmpty),
-        kept, operationName, txn)
-      MergeMetrics(counts - DropTag)
-    } finally resolved.unpersist()
+    // Delta contract: multiple source rows matching one target row is an
+    // error, not silent duplication (skipped when the caller asserted
+    // key-unique sources — the keyed path's same contract)
+    if (!sourceKeysUnique) {
+      val multi = resolved.filter(col(TRowId).isNotNull)
+        .groupBy(TRowId).count().filter(col("count") > 1).limit(1).count()
+      if (multi > 0)
+        throw new graft.metadata.MetadataException(
+          "MERGE source has multiple rows matching one target row")
+    }
+    // action counts ride the write itself, observed before the drop/delete
+    // filter: the resolve runs ONCE, and the counts describe exactly the
+    // rows that evaluation wrote (self-consistent under nondeterministic
+    // clause conditions, nothing persisted)
+    val tally = actionTally(indexed.map { case (c, i) => tagFor(c, tag(i, c)) })
+    val kept = tally.attach(resolved)
+      .filter(col(ActionCol) =!= DropTag && !col(ActionCol).startsWith(DeletePrefix))
+      .drop(ActionCol, TRowId)
+    table.replacePartitions(pruned.filter(_ => m.partitionColumns.nonEmpty),
+      kept, operationName, txn, writtenRows = Some(() => writtenTotal(tally)))
+    MergeMetrics(nonZero(tally.values) - DropTag)
   }
+
+  /** One `count_if` per action tag (plus `unchanged` and `drop`), to ride
+    * the commit's write job ([[ObservedCounts]]). */
+  private def actionTally(clauseTags: Seq[String]): ObservedCounts =
+    new ObservedCounts((clauseTags ++ Seq(UnchangedTag, DropTag)).distinct
+      .map(t => t -> count_if(col(ActionCol) === lit(t))))
+
+  /** Rows the tallied frame wrote: every tag but `drop` and `del:*`. */
+  private def writtenTotal(tally: ObservedCounts): Long =
+    tally.values.collect {
+      case (t, n) if t != DropTag && !t.startsWith(DeletePrefix) => n
+    }.sum
+
+  /** Metrics report only the tags a merge produced; `MergeMetrics.count`
+    * resolves an absent tag to 0. */
+  private def nonZero(counts: Map[String, Long]): Map[String, Long] =
+    counts.filter(_._2 != 0L)
 
   private def tagFor(c: Clause, base: String): String =
     c.action match {
@@ -407,7 +438,8 @@ final class MergeBuilder private[tables] (
     *   rewrite = read(touched files) ⟕ broadcast(source) → resolve
     *   inserts = source ⟂anti broadcast(matched)          // small × small
     *   commit  = replaceFiles(touched, rewrite ∪ inserts) // untouched
-    *             manifest entries carry over verbatim
+    *             manifest entries carry over verbatim; insert counts
+    *             are observed on this write
     * }}}
     *
     * At 100 TB this is the difference between a 10-row CDC slice rewriting
@@ -471,7 +503,6 @@ final class MergeBuilder private[tables] (
         when(col(SFlag).isNotNull, col(TRowId)).as(TRowId))
       .filter(col(ActionCol) =!= UnchangedTag || col(MatchKey).isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var inserts: DataFrame = null
     try {
       // Delta contract (same check as the generic path): multiple source
       // rows matching ONE TARGET ROW is an error — but duplicate source
@@ -533,8 +564,8 @@ final class MergeBuilder private[tables] (
       val baseCounts = (probeCounts - UnchangedTag) +
         (UnchangedTag -> (totalInScope - touchedRows))
 
-      // insert side: source rows whose key matched nothing in the target.
-      // Persisted (slice-bounded): metrics and the write both consume it.
+      // insert side: source rows whose key matched nothing in the target,
+      // consumed once, by the phase-2 write
       val matchedKeys0 = probe.filter(col(MatchKey).isNotNull)
         .select(col(MatchKey).as(k)).distinct()
       val matchedKeys =
@@ -564,24 +595,23 @@ final class MergeBuilder private[tables] (
             when(c.cond.map(expr).getOrElse(lit(true)), v).otherwise(rest)
         }.as(name)
       }
-      inserts = source.alias("source")
+      val inserts = source.alias("source")
         .join(matchedKeys, Seq(k), "left_anti")
         .select(insertValueCols :+ insertAction.as(ActionCol): _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // insert-clause METRICS are deferred until after the phase-2 write:
-      // the write is what first materializes the persisted `inserts`
-      // frame (the anti-join runs inside that job), so collecting counts
-      // afterwards is a cache-local scan instead of a second execution of
-      // the anti-join — one fewer full action on the commit-latency path
-      def insertCounts(): Map[String, Long] = Phase("mrg:insertCollect")(
-        inserts.groupBy(ActionCol).count().collect())
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      // zero-count tags are dropped: the generic path only reports tags it
-      // observed, and `MergeMetrics.count` already resolves absent → 0
-      def counts(ic: Map[String, Long]): Map[String, Long] =
-        (baseCounts.keySet ++ ic.keySet).map(key =>
-          key -> (baseCounts.getOrElse(key, 0L) + ic.getOrElse(key, 0L)))
-          .toMap.filter(_._2 != 0L)
+      // insert-clause METRICS ride the phase-2 write: the tally observes
+      // the rewrite ∪ inserts union before its drop/delete filter, so the
+      // anti-join runs once, inside the write job, and no count job
+      // follows it. Rewrite rows re-resolve phase 1's actions exactly, so
+      // matched/by-source/unchanged counts keep coming from the probe.
+      val tally = actionTally(indexed.map { case (c, i) => tagFor(c, tag(i, c)) })
+      val insertTags = insertClauses.map { case (c, i) => tagFor(c, tag(i, c)) }
+        .toSet + DropTag
+      def counts(): Map[String, Long] = {
+        val ic = tally.values.filter { case (t, _) => insertTags(t) }
+        nonZero((baseCounts.keySet ++ ic.keySet).map(key =>
+          key -> (baseCounts.getOrElse(key, 0L) + ic.getOrElse(key, 0L))).toMap)
+      }
+      val written = Some(() => writtenTotal(tally))
 
       // ---- phase 2: re-resolve ONLY the touched files (deterministic
       // expressions reproduce phase 1's actions exactly) and commit them
@@ -674,26 +704,24 @@ final class MergeBuilder private[tables] (
           .filter(col(ActionCol) =!= UnchangedTag)
         val classic = joinTarget(readTouched(rewriteEntries))
           .select(outCols ++ matCarry :+ actionCol.as(ActionCol): _*)
-        val kept = classic.unionByName(images).unionByName(insertsAligned)
+        val kept = tally.attach(
+            classic.unionByName(images).unionByName(insertsAligned))
           .filter(col(ActionCol) =!= DropTag &&
             !col(ActionCol).startsWith(DeletePrefix))
           .drop(ActionCol)
         table.maskAndReplaceFiles(dvEntries, newDead, dropPaths,
-          rewriteEntries.map(_.path), kept, operationName, txn)
+          rewriteEntries.map(_.path), kept, operationName, txn, written)
       } else {
         val rewrite = joinTarget(readTouched(touchedEntries))
           .select(outCols ++ matCarry :+ actionCol.as(ActionCol): _*)
-        val kept = rewrite.unionByName(insertsAligned)
+        val kept = tally.attach(rewrite.unionByName(insertsAligned))
           .filter(col(ActionCol) =!= DropTag && !col(ActionCol).startsWith(DeletePrefix))
           .drop(ActionCol)
-        Phase("mrg:replaceFiles")(
-          table.replaceFiles(touchedPaths, kept, operationName, txn))
+        Phase("mrg:replaceFiles")(table.replaceFiles(touchedPaths, kept,
+          operationName, txn, writtenRows = written))
       }
-      MergeMetrics(counts(insertCounts()) - DropTag)
-    } finally {
-      probe.unpersist()
-      if (inserts != null) inserts.unpersist()
-    }
+      MergeMetrics(counts() - DropTag)
+    } finally probe.unpersist()
   }
 
   private def decodeUri(u: String): String = MergeBuilder.decodeUri(u)
@@ -727,6 +755,7 @@ object MergeBuilder {
   private[tables] val TFile = "__graft_file"
   private[tables] val TPos = "__graft_pos"
   private[tables] val ActionCol = "__graft_action"
+  private[tables] val CondPrefix = "__graft_c"
   private[tables] val MatchKey = "__graft_mk"
   private[tables] val TRowId = "__graft_tid"
   private[tables] val DropTag = "drop"

@@ -45,11 +45,18 @@ object GraftManifestScan {
     * from the post-scan filter set and the FileIndex is trusted to
     * prune (mirrors `PartitioningAwareFileIndex.prunePartitions`).
     * Ignoring `partitionFilters` here is a semantics bug, not a missed
-    * optimization: `filter("part = x")` would return every partition. */
-  private def prunePartitions(partitionFilters: Seq[Expression],
+    * optimization: `filter("part = x")` would return every partition.
+    * A filter naming an attribute the partition schema lacks cannot be
+    * evaluated per directory; the dirs then come back unpruned instead
+    * of the bind failing with an index error. The planner hands over
+    * only filters over partition columns, so this is a guard on that
+    * contract, not a pruning path. */
+  private[sql] def prunePartitions(partitionFilters: Seq[Expression],
       partSchema: StructType,
-      dirs: Seq[PartitionDirectory]): Seq[PartitionDirectory] =
-    if (partitionFilters.isEmpty) dirs
+      dirs: Seq[PartitionDirectory]): Seq[PartitionDirectory] = {
+    val bound = partitionFilters.forall(_.references.forall(a =>
+      partSchema.fieldNames.contains(a.name)))
+    if (partitionFilters.isEmpty || !bound) dirs
     else {
       val predicate = Predicate.createInterpreted(
         partitionFilters.reduce(And).transform {
@@ -60,6 +67,7 @@ object GraftManifestScan {
       predicate.initialize(0)
       dirs.filter(d => predicate.eval(d.values))
     }
+  }
 
   private final class ListedFileIndex(files: Array[FileStatus], tableRoot: Path)
       extends FileIndex {

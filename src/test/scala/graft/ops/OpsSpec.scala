@@ -676,6 +676,20 @@ class OpsSpec extends AnyFunSuite with Matchers {
     jobs should be <= 12
   }
 
+  test("connected components release the edge table when a job fails") {
+    spark.catalog.clearCache()
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cache.isEmpty shouldBe true
+    val boom = spark.range(0L, 20L).select(col("id").as("x"),
+      when(col("id") === 7L, raise_error(lit("edge 7 is poisoned")))
+        .otherwise(col("id") + 1L).as("y"))
+    intercept[Exception] {
+      GraphOps.connectedComponents(boom, "x", "y").collect()
+    }
+    cache.isEmpty shouldBe true
+  }
+
   test("connected components: empty edge list yields empty result") {
     val empty = Seq.empty[(Long, Long)].toDF("x", "y")
     GraphOps.connectedComponents(empty, "x", "y").count() shouldBe 0L

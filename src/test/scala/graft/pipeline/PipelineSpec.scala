@@ -208,6 +208,11 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     run(md, 10, "s2.parquet", T2)
 
     val table = graft.tables.ManagedTable.forLocation(spark, md.silverLocation(e))
+    // precondition, built explicitly: two small files. A small-table merge
+    // rewrites the table into one AQE-sized file, so a direct append of a
+    // one-row file supplies the second.
+    table.append(table.read().filter(col("ID") === 11).withColumn("ID", lit(12)))
+    table.manifest.get.files.size should be >= 2
     val before = table.read().orderBy("ID").collect()
     Runner.maintainEntity(md, e)
     table.read().orderBy("ID").collect() shouldBe before
@@ -215,6 +220,48 @@ class PipelineSpec extends AnyFunSuite with Matchers {
     // itself must be the file-granular compactSmall, never a full compact
     table.history().map(_.operation) should contain("compactSmall")
     table.history().map(_.operation) should not contain "compact"
+  }
+
+  test("merge ingest job-count lock: one resolve-and-write pass, one " +
+      "bloom-build job for a multi-file commit") {
+    val md = fixture(extraEntity = """,
+      { "id": 13, "name": "cust_j", "connection": "src1", "processtype": "merge",
+        "settings": { "delete_missing": false },
+        "columns": [
+          { "name": "ID", "datatype": "integer", "fieldroles": ["businesskey"] },
+          { "name": "SeqNr", "datatype": "integer" },
+          { "name": "name", "datatype": "string" }
+        ] }""")
+    val e = md.getEntity(13)
+    writeSlice(md, e, "s1.parquet",
+      mergeSlice((1 to 40).map(i => (i, i, s"n$i"))))
+    run(md, 13, "s1.parquet", T1)
+    Runner.maintainEntity(md, e) // registers the PK bloom index
+    val table = graft.tables.ManagedTable.forLocation(spark, md.silverLocation(e))
+    table.bloomIndexes should not be empty
+    writeSlice(md, e, "s2.parquet",
+      mergeSlice((35 to 50).map(i => (i, i + 100, s"u$i"))))
+    val p = new Processing(md, e, "s2.parquet", Map("processing.time" -> T2))
+    p.sliceStats // the source phase's jobs run before the count
+    // uncoalesced shuffle partitions: the merge commit writes several files
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val (summary, jobs) =
+      try org.apache.spark.sql.GraftJobCounter(spark.sparkContext) {
+        Strategy.forType(ProcessType.Merge).run(p)
+      } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    summary.updated shouldBe 6
+    summary.inserted shouldBe 10
+    table.history().head.metrics("filesAdded") should be >= 2L
+    withClue(jobs.mkString("strategy jobs:\n", "\n", "\n")) {
+      // the slice is key-unique (no multi-match guard job) and the table
+      // is under smallScopeBytes, so the merge is the generic single pass:
+      // its write (AQE runs each shuffle stage as a job: slice, target,
+      // result) and the sidecar build — no persist, no metrics job
+      jobs.count(_.contains("BloomIndex")) shouldBe 1
+      jobs.size shouldBe 4
+    }
+    table.read().count() shouldBe 50L
+    table.readEquals("ID", Seq(50)).count() shouldBe 1L
   }
 
   test("maintainEntity: bloom_index setting registers the index; later writes keep it") {
