@@ -275,20 +275,6 @@ final class HistoricStrategy extends Strategy {
     val twoPhaseSafe = joinSlice(target.limit(0)).select(actionCol.as("__a"))
       .queryExecution.analyzed.expressions.forall(_.deterministic)
 
-    // explode `emitted` (`__rows` arrays tagged by `__action`) into target
-    // rows, with the per-action counts and the exploded row total observed
-    // on the write that consumes it — no count job of their own
-    def observedRows(emitted: DataFrame): (DataFrame, ObservedCounts) = {
-      val tally = new ObservedCounts(
-        Seq("updated", "unchanged", "deleted", "inserted")
-          .map(a => a -> count_if(col("__action") === a)) :+
-          ("rows" -> coalesce(sum(size(col("__rows"))), lit(0L))))
-      val out = tally.attach(emitted)
-        .select(explode(col("__rows")).as("__r"))
-        .select(targetCols.map(c => col(s"__r.`$c`").as(c)): _*)
-      (out, tally)
-    }
-
     if (twoPhaseSafe) {
       // ---- phase 1: touch detection + metrics over a narrow projection.
       // Only matched and delete-inferred rows survive ("kept" = history and
@@ -347,33 +333,42 @@ final class HistoricStrategy extends Strategy {
         // manifest entries (all history, all unchanged-current files)
         // carry into the new version verbatim — a small CDC slice into a
         // deep SCD2 table rewrites a handful of files, never the
-        // ever-growing history. The insert count rides the write.
+        // ever-growing history. The insert count rides the write: each
+        // inserted record explodes into exactly one row tagged `inserted`.
         val rewrite = joinSlice(p.table.readManifestFiles(manifest, touchedEntries))
           .select(rowsCol.as("__rows"), actionCol.as("__action"))
-        val (out, tally) = observedRows(rewrite.unionByName(inserts))
-        p.table.replaceFiles(touchedPaths, out, "merge",
-          writtenRows = Some(() => tally.values("rows")))
+        val out = rewrite.unionByName(inserts)
+          .select(explode(col("__rows")).as("__r"), col("__action"))
+          .select(targetCols.map(c => col(s"__r.`$c`").as(c)) :+
+            col("__action"): _*)
+        val tally = new ObservedCounts("__action", Seq("inserted"))
+        p.table.replaceFiles(touchedPaths, out, "merge", tally = Some(tally))
         summarize(counts, tally.values("inserted"))
       } finally probe.unpersist()
     } else {
-      // ---- single-pass fallback: resolve every scope row once, in the
-      // write itself, with the action counts observed on that same
-      // evaluation (self-consistent under nondeterministic expressions);
-      // partition-granular commit. The matched-key side reads only the
-      // deterministic join, so re-deriving it costs no consistency.
+      // ---- single-pass fallback: resolve every scope row once, persist,
+      // derive metrics and the commit from that one frame (self-consistent
+      // under nondeterministic expressions), partition-granular commit.
       val resolved = joined.select(rowsCol.as("__rows"),
           actionCol.as("__action"), mkCol.as("__mk"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val matchedKeys0 = resolved.filter(col("__mk").isNotNull)
         .select(col("__mk").as(pk)).distinct()
       val matchedKeys = if (bigSlice) matchedKeys0 else broadcast(matchedKeys0)
       val inserts = src.alias("source")
         .join(matchedKeys, Seq(pk), "left_anti")
-        .select(array(sourceRow).as("__rows"), lit("inserted").as("__action"))
-      val (out, tally) =
-        observedRows(resolved.drop("__mk").unionByName(inserts))
-      p.table.replacePartitions(pruned, out, "merge",
-        writtenRows = Some(() => tally.values("rows")))
-      summarize(tally.values, tally.values("inserted"))
+        .select(array(sourceRow).as("__rows"), lit("inserted").as("__action"),
+          lit(null).cast("string").as("__mk"))
+      val emitted = resolved.unionByName(inserts)
+      try {
+        val counts = emitted.groupBy("__action").count()
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val out = emitted
+          .select(explode(col("__rows")).as("__r"))
+          .select(targetCols.map(c => col(s"__r.`$c`").as(c)): _*)
+        p.table.replacePartitions(pruned, out, "merge")
+        summarize(counts, counts.getOrElse("inserted", 0L))
+      } finally resolved.unpersist()
     }
   }
 }

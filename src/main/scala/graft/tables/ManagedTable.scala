@@ -2047,8 +2047,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
             .filter(f => d0.columns.contains(f.name))
             .foldLeft(d0)((acc, f) => acc.withColumn(f.name,
               col(s"`${f.name}`").as(f.name, f.metadata))))
-      enforceConstraints(d, cs, operation)
-      val files = writeCommit(d, partitionBy)
+      val files = writeCommit(d, partitionBy, constraints = cs,
+        operation = operation)
       commitDelta(d.schema.json, partitionBy, operation,
         base = None, adds = files, removes = Nil, txn = txn,
         constraintsOverride = Some(cs), generatedOverride = Some(gs),
@@ -2072,9 +2072,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         val g = applyGenerated(withIds, m.generated, Some(m.schema),
           "overwriteDynamic")
         val d = reconcileSchema(g, m)
-        enforceConstraints(d, m.constraints, "overwriteDynamic")
         val cmx = extendMapping(m.columnMapping, d.schema)
-        val newFiles = writeCommit(d, partitionBy, cmx)
+        val newFiles = writeCommit(d, partitionBy, cmx,
+          constraints = m.constraints, operation = "overwriteDynamic")
         val replaced = newFiles.map(_.partitionValues).toSet
         val removed = m.files.filter(f => replaced.contains(f.partitionValues))
         commitDelta(d.schema.json, partitionBy, "overwriteDynamic",
@@ -2117,7 +2117,6 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         val g = applyGenerated(withIds, m.generated, Some(m.schema),
           "replaceWhere")
         val d = reconcileSchema(g, m)
-        enforceConstraints(d, m.constraints, "replaceWhere")
         if (d.filter(!pred).limit(1).count() > 0)
           throw new ConstraintViolationException(
             s"replaceWhere on $rootPath: inserted rows do not all match " +
@@ -2157,7 +2156,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         val content = keptRows.fold(d)(k =>
           d.unionByName(k.select(d.columns.map(c => col(s"`$c`")): _*)))
         val cmx = extendMapping(m.columnMapping, d.schema)
-        val newFiles = writeCommit(content, m.partitionColumns, cmx)
+        val newFiles = writeCommit(content, m.partitionColumns, cmx,
+          constraints = m.constraints, operation = "replaceWhere")
         // replaceWhere's read set IS the predicate region (inserted rows
         // are constrained to it above), so it rebases under the same
         // predicate-aware rule as DML
@@ -2204,9 +2204,9 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
           applyIdentity(df, m, operation, keepExisting = false)
         val g = applyGenerated(withIds, m.generated, Some(m.schema), operation)
         val d = reconcileSchema(g, m)
-        enforceConstraints(d, m.constraints, operation)
         val cmx = extendMapping(m.columnMapping, d.schema)
-        val newFiles = writeCommit(d, m.partitionColumns, cmx)
+        val newFiles = writeCommit(d, m.partitionColumns, cmx,
+          constraints = m.constraints, operation = operation)
         // a TERMINAL commit failure must not orphan the just-written
         // commit dir (every path of this append shares one
         // data/<commitId>/ root, and no manifest references it until
@@ -2734,8 +2734,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         .foreach { content0 =>
           val content = applyGenerated(content0, m.generated, Some(m.schema),
             op, recompute = true)
-          enforceConstraints(content, m.constraints, op)
-          adds ++= writeCommit(content, m.partitionColumns, m.columnMapping)
+          adds ++= writeCommit(content, m.partitionColumns, m.columnMapping,
+            constraints = m.constraints, operation = op)
         }
       removes ++= rewriteEntries.map(_.path)
 
@@ -2991,7 +2991,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * assignment pass), watermark advanced by the allocated count in the
     * SAME commit as the rows. */
   private def applyIdentity(df: DataFrame, m: Manifest, operation: String,
-      keepExisting: Boolean): (DataFrame, Option[Map[String, String]]) = {
+      keepExisting: Boolean, written: Column = lit(true))
+      : (DataFrame, Option[Map[String, String]]) = {
     val rules = identityRules(m)
     if (rules.isEmpty || ConstraintExemptOps.exists(operation.startsWith))
       return (df, None)
@@ -3005,23 +3006,22 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       // future assignments are the user's to reconcile via syncIdentity
       val byDefault = m.properties
         .get(s"graft.identity.$name.byDefault").contains("true")
-      // the probes and the id assignment read `unobserved` frames: only
-      // the write may report an observation riding `df`
       if (has && !keepExisting && !byDefault &&
-          ObservedCounts.unobserved(out)
-            .filter(col(s"`$name`").isNotNull).limit(1).count() > 0)
+          out.filter(col(s"`$name`").isNotNull).limit(1).count() > 0)
         throw new ConstraintViolationException(
           s"identity column '$name' is GENERATED ALWAYS on $rootPath — " +
             s"omit it (or write NULL) in '$operation'; the engine assigns")
       val withNullCol =
         if (has) out
         else out.withColumn(name, lit(null).cast("bigint"))
-      val needsIds = ObservedCounts.unobserved(withNullCol)
-        .filter(col(s"`$name`").isNull)
+      // rows the commit counts but does not write (a merge's deletes,
+      // see ObservedCounts) never consume an id
+      val pending = col(s"`$name`").isNull && written
+      val needsIds = withNullCol.filter(pending)
       val cnt = needsIds.count()
       if (cnt == 0L) { out = withNullCol }
       else {
-        val keeps = withNullCol.filter(col(s"`$name`").isNotNull)
+        val keeps = withNullCol.filter(!pending)
         val schema = withNullCol.schema
         val idx = schema.fieldIndex(name)
         val assigned = spark.createDataFrame(
@@ -3140,8 +3140,7 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       }
     }
     if (checks.nonEmpty) {
-      val viol = ObservedCounts.unobserved(out)
-        .filter(checks.map(_._2).reduce(_ || _))
+      val viol = out.filter(checks.map(_._2).reduce(_ || _))
         .select(checks.map { case (n, c) => c.as(n) }: _*)
         .limit(1).collect()
       if (viol.nonEmpty) {
@@ -3165,27 +3164,39 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     Seq("compact", "compactSmall", "zorder", "collectStatistics", "restore",
       "purgeDv")
 
-  /** Limit-1 violation probe: one short-circuit job when constraints
-    * exist, zero cost otherwise. Violation = expression IS FALSE (SQL
-    * CHECK three-valued logic: NULL passes). */
+  /** Per-constraint violation flags for rows `operation` writes
+    * (none for maintenance rewrites). Violation = expression IS FALSE
+    * (SQL CHECK three-valued logic: NULL passes). Writes check them in
+    * the write job itself ([[writeCommit]]). */
+  private def constraintFlags(cs: Map[String, String],
+      operation: String): Seq[(String, Column)] =
+    if (ConstraintExemptOps.exists(operation.startsWith)) Nil
+    else cs.toSeq.sortBy(_._1).map { case (n, e) =>
+      n -> !coalesce(expr(e), lit(true)) }
+
+  private def violation(cs: Map[String, String], name: String,
+      operation: String): ConstraintViolationException =
+    new ConstraintViolationException(
+      s"CHECK constraint '$name' (${cs(name)}) violated by a row " +
+        s"written to $rootPath during '$operation'")
+
+  /** Limit-1 violation probe over rows already in the table (a new
+    * constraint must hold for them): one short-circuit job. */
   private def enforceConstraints(df: DataFrame,
-      cs: Map[String, String], operation: String): Unit =
-    if (cs.nonEmpty && !ConstraintExemptOps.exists(operation.startsWith)) {
-      val flags = cs.toSeq.map { case (n, e) =>
-        n -> !coalesce(expr(e), lit(true)) }
-      val viol = ObservedCounts.unobserved(df)
-        .filter(flags.map(_._2).reduce(_ || _))
+      cs: Map[String, String], operation: String): Unit = {
+    val flags = constraintFlags(cs, operation)
+    if (flags.nonEmpty) {
+      val viol = df.filter(flags.map(_._2).reduce(_ || _))
         .select(flags.map { case (n, c) => c.as(n) }: _*)
         .limit(1).collect()
       if (viol.nonEmpty) {
         val row = viol.head
         val name = flags.indices.find(i => row.getBoolean(i))
           .map(flags(_)._1).getOrElse(flags.head._1)
-        throw new ConstraintViolationException(
-          s"CHECK constraint '$name' (${cs(name)}) violated by a row " +
-            s"written to $rootPath during '$operation'")
+        throw violation(cs, name, operation)
       }
     }
+  }
 
   /** Additive schema evolution as a METADATA-ONLY commit: publish a
     * widened schema (existing fields unchanged, new fields appended
@@ -3671,30 +3682,30 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     * data instead of dying at the finish line. MERGE keeps fail-fast
     * (`dmlRebasePredicate = None`): its read set is the whole source
     * frame, which no file-stats check can summarize. A terminal conflict
-    * sweeps the just-written commit dir, so the loser leaks nothing. */
+    * sweeps the just-written commit dir, so the loser leaks nothing.
+    *
+    * `tally` (a MERGE's action counters, [[ObservedCounts]]): `df` then
+    * carries the tally's tag column and also the rows to count but not
+    * write; both are dropped right above the write. */
   def replaceFiles(
       removePaths: Seq[String],
       df: DataFrame,
       operation: String = "replaceFiles",
       txn: Option[Txn] = None,
       dmlRebasePredicate: Option[String] = None,
-      writtenRows: Option[() => Long] = None): Unit = withWriteLock {
+      tally: Option[ObservedCounts] = None): Unit = withWriteLock {
     val m = requireManifest
     // engine-built rewrite content (merge updates, DML images): existing
     // identity values pass through, NULLs (merge inserts) allocate;
     // generated columns are RECOMPUTED, not validated — an UPDATE that
     // changed a base column must refresh its derived column, like Delta
-    val (withIds, propsOv) =
-      applyIdentity(df, m, operation, keepExisting = true)
-    val g = applyGenerated(withIds, m.generated, Some(m.schema), operation,
-      recompute = true)
-    val d = reconcileSchema(g, m)
-    enforceConstraints(d, m.constraints, operation)
-    val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    val newFiles = writeCommit(d, m.partitionColumns, cmx)
-    checkWrittenRows(newFiles, writtenRows, operation)
-    commitReplaceWithRebase(m, logicalSchema(d).json, operation, newFiles,
-      removePaths, txn, Some(cmx), propsOv, dmlRebasePredicate)
+    prepareRewrite(df, m, operation, tally) { (d, schema, propsOv) =>
+      val cmx = extendMapping(m.columnMapping, schema)
+      val newFiles = writeCommit(d, m.partitionColumns, cmx,
+        constraints = m.constraints, operation = operation, tally = tally)
+      commitReplaceWithRebase(m, schema.json, operation, newFiles,
+        removePaths, txn, Some(cmx), propsOv, dmlRebasePredicate)
+    }
     maybeAutoCompact()
   }
 
@@ -3769,27 +3780,36 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         fs.delete(new Path(root, s"${segs(0)}/${segs(1)}"), true)
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Exactness gate for a commit whose writer observed its own output
-    * ([[ObservedCounts]]): before the pointer swap, the observed row
-    * total must equal the row counts the footer-stats pass read for the
-    * files just written. A mismatch — a task re-run folded in twice, a
-    * plan that evaluated differently than it counted — fails the commit
-    * with nothing published. A file whose footer yielded no row count
-    * cannot be compared, and skips the gate. */
-  private def checkWrittenRows(newFiles: Seq[TableFile],
-      writtenRows: Option[() => Long], operation: String): Unit =
-    writtenRows.foreach { observed =>
-      if (newFiles.forall(_.rows.isDefined)) {
-        val inFiles = newFiles.flatMap(_.rows).sum
-        val expected = observed()
-        if (inFiles != expected) {
-          dropCommitDir(newFiles)
-          throw new MetadataException(
-            s"$operation on $rootPath: the write observed $expected rows " +
-              s"but its files hold $inFiles; nothing was committed")
-        }
-      }
-    }
+  /** Front half of the rewrite commits ([[replaceFiles]],
+    * [[maskAndReplaceFiles]], [[replacePartitions]]) over engine-built
+    * content: identity NULLs allocate (existing values pass through),
+    * generated columns recompute, the schema reconciles; `commit` gets the
+    * frame to write, its logical schema (without the tally's tag column)
+    * and the identity watermark override.
+    *
+    * Identity allocation reads its content three times (a count, the
+    * sizing pass of `zipWithIndex`, the write), so on a table with
+    * identity rules the content is materialized once for the commit:
+    * the resolve runs once, and under a nondeterministic plan (a merge
+    * condition over `rand()`) every read sees the same rows, so the ids
+    * go to exactly the rows written. */
+  private def prepareRewrite[T](df: DataFrame, m: Manifest,
+      operation: String, tally: Option[ObservedCounts])(
+      commit: (DataFrame, org.apache.spark.sql.types.StructType,
+        Option[Map[String, String]]) => T): T = {
+    val stable =
+      if (identityRules(m).isEmpty) df
+      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (withIds, propsOv) = applyIdentity(stable, m, operation,
+        keepExisting = true, tally.fold(lit(true))(_.written))
+      val g = applyGenerated(withIds, m.generated, Some(m.schema), operation,
+        recompute = true)
+      val tag = tally.map(_.tagCol).toSeq
+      val d = reconcileSchema(g, m, transport = tag)
+      commit(d, logicalSchema(d.drop(tag: _*)), propsOv)
+    } finally if (stable ne df) stable.unpersist()
+  }
 
   /** Content-preserving maintenance commit ([[compact]], [[compactSmall]],
     * [[zorder]], [[purgeDeletionVectors]]): atomically replace exactly
@@ -3813,13 +3833,13 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       operation: String,
       propsExtraFor: Long => Map[String, String] = _ => Map.empty): Unit = {
     val d = reconcileSchema(df, base)
-    enforceConstraints(d, base.constraints, operation)
     val cmx = extendMapping(base.columnMapping, logicalSchema(d))
     // preserveLayout: the maintenance caller range-partitioned and sorted
     // its frame (zorder / cluster / compact targets); a rebalance here
     // would scatter the locality the rewrite exists to create
     val newFiles = writeCommit(d, base.partitionColumns, cmx,
-      preserveLayout = true)
+      preserveLayout = true, constraints = base.constraints,
+      operation = operation)
     // row-tracking watermark bumps are invisible to a content-preserving
     // rewrite — an interleaved append moving ONLY the watermark must not
     // forfeit the OPTIMIZE (the rewritten files carry their IDs
@@ -3894,42 +3914,39 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       content: DataFrame,
       operation: String = "merge",
       txn: Option[Txn] = None,
-      writtenRows: Option[() => Long] = None): Unit = withWriteLock {
+      tally: Option[ObservedCounts] = None): Unit = withWriteLock {
     val m = requireManifest
     // merge-built content: identity NULLs (inserts) allocate, generated
     // columns recompute (see replaceFiles)
-    val (withIds, propsOv) =
-      applyIdentity(content, m, operation, keepExisting = true)
-    val g = applyGenerated(withIds, m.generated, Some(m.schema), operation,
-      recompute = true)
-    val d = reconcileSchema(g, m)
-    enforceConstraints(d, m.constraints, operation)
-    var adds = List.empty[TableFile]
-    if (dvUpdates.nonEmpty) {
-      val name = s"dv-${UUID.randomUUID().toString}"
-      val entries = dvUpdates.map(_._1)
-      val masked = entries.filter(_.dv.isDefined)
-      val prior =
-        if (masked.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dvSchema)
-        else readDvSidecars(masked.flatMap(_.dv).distinct)
-          .filter(col("file").isin(
-            masked.map(f => new Path(f.path).getName): _*))
-      rebalanced(newDead.select(col("file"), col("pos")).union(prior))
-        .write.options(commitWriteOpts)
-        .parquet(new Path(dvDir, name).toString)
-      adds ++= dvUpdates.map { case (f, dead) =>
-        f.copy(dv = Some(name), dvRows = Some(dead)) }
+    prepareRewrite(content, m, operation, tally) { (d, schema, propsOv) =>
+      // content first: a write that fails its in-write checks then leaves
+      // no sidecar behind
+      val cmx = extendMapping(m.columnMapping, schema)
+      var adds = writeCommit(d, m.partitionColumns, cmx,
+        constraints = m.constraints, operation = operation, tally = tally)
+        .toList
+      if (dvUpdates.nonEmpty) {
+        val name = s"dv-${UUID.randomUUID().toString}"
+        val entries = dvUpdates.map(_._1)
+        val masked = entries.filter(_.dv.isDefined)
+        val prior =
+          if (masked.isEmpty)
+            spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dvSchema)
+          else readDvSidecars(masked.flatMap(_.dv).distinct)
+            .filter(col("file").isin(
+              masked.map(f => new Path(f.path).getName): _*))
+        rebalanced(newDead.select(col("file"), col("pos")).union(prior))
+          .write.options(commitWriteOpts)
+          .parquet(new Path(dvDir, name).toString)
+        adds ++= dvUpdates.map { case (f, dead) =>
+          f.copy(dv = Some(name), dvRows = Some(dead)) }
+      }
+      commitDelta(schema.json, m.partitionColumns, operation,
+        base = Some(m), adds = adds,
+        removes = dropPaths ++ replacePaths ++ dvUpdates.map(_._1.path),
+        txn = txn, mappingOverride = Some(cmx), propertiesOverride = propsOv)
     }
-    val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    val written = writeCommit(d, m.partitionColumns, cmx)
-    checkWrittenRows(written, writtenRows, operation)
-    adds ++= written
-    commitDelta(logicalSchema(d).json, m.partitionColumns, operation,
-      base = Some(m), adds = adds,
-      removes = dropPaths ++ replacePaths ++ dvUpdates.map(_._1.path),
-      txn = txn, mappingOverride = Some(cmx), propertiesOverride = propsOv)
     maybeAutoCompact()
   }
 
@@ -4122,30 +4139,26 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       df: DataFrame,
       operation: String = "replacePartitions",
       txn: Option[Txn] = None,
-      writtenRows: Option[() => Long] = None): Unit = withWriteLock {
+      tally: Option[ObservedCounts] = None): Unit = withWriteLock {
     val m = requireManifest
-    val (withIds, propsOv) =
-      applyIdentity(df, m, operation, keepExisting = true)
-    val g = applyGenerated(withIds, m.generated, Some(m.schema), operation,
-      recompute = true)
-    val d = reconcileSchema(g, m)
-    enforceConstraints(d, m.constraints, operation)
-    val cmx = extendMapping(m.columnMapping, logicalSchema(d))
-    val newFiles = writeCommit(d, m.partitionColumns, cmx)
-    checkWrittenRows(newFiles, writtenRows, operation)
-    val removed = partitions match {
-      case None => m.files
-      case Some(ps) =>
-        val replaced = ps.toSet
-        m.files.filter(f => replaced.contains(f.partitionValues))
+    prepareRewrite(df, m, operation, tally) { (d, schema, propsOv) =>
+      val cmx = extendMapping(m.columnMapping, schema)
+      val newFiles = writeCommit(d, m.partitionColumns, cmx,
+        constraints = m.constraints, operation = operation, tally = tally)
+      val removed = partitions match {
+        case None => m.files
+        case Some(ps) =>
+          val replaced = ps.toSet
+          m.files.filter(f => replaced.contains(f.partitionValues))
+      }
+      // no rebase here — a rival commit inside the window surfaces as
+      // ConcurrentWriteException via commitDelta's stale-base check
+      // (fail-fast; the hook is the race-injection seam tests use)
+      onReplaceCommitAttempt()
+      commitDelta(schema.json, m.partitionColumns, operation,
+        base = Some(m), adds = newFiles, removes = removed.map(_.path), txn = txn,
+        mappingOverride = Some(cmx), propertiesOverride = propsOv)
     }
-    // no rebase here — a rival commit inside the window surfaces as
-    // ConcurrentWriteException via commitDelta's stale-base check
-    // (fail-fast; the hook is the race-injection seam tests use)
-    onReplaceCommitAttempt()
-    commitDelta(logicalSchema(d).json, m.partitionColumns, operation,
-      base = Some(m), adds = newFiles, removes = removed.map(_.path), txn = txn,
-      mappingOverride = Some(cmx), propertiesOverride = propsOv)
   }
 
   /** Compact partitions whose file count reached `minFiles`: their rows are
@@ -4793,7 +4806,8 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     *
     * Any other type change would make existing files unreadable under the
     * new manifest schema — fail instead of committing it. */
-  private def reconcileSchema(df: DataFrame, m: Manifest): DataFrame = {
+  private def reconcileSchema(df: DataFrame, m: Manifest,
+      transport: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.types._
     import ManagedTable.widens
     val targetFields = m.schema.fields.map(f => f.name.toLowerCase -> f).toMap
@@ -4814,11 +4828,12 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
     if (missing.nonEmpty)
       throw new MetadataException(
         s"Source is missing target column(s): ${missing.toSeq.sorted.mkString(", ")}")
-    // the materialized row-ID/commit-version columns ride rewrite
-    // content without ever entering the table schema — not drift
+    // the materialized row-ID/commit-version columns (and a tally's tag
+    // column) ride rewrite content without ever entering the table
+    // schema — not drift
     val added = srcFields.keySet -- targetFields.keySet -
       ManagedTable.MatRowIdCol.toLowerCase -
-      ManagedTable.MatRowCvCol.toLowerCase
+      ManagedTable.MatRowCvCol.toLowerCase -- transport.map(_.toLowerCase)
     if (added.nonEmpty)
       org.slf4j.LoggerFactory.getLogger(classOf[ManagedTable]).warn(
         s"Schema drift on $rootPath: adopting new column(s) " +
@@ -4903,17 +4918,80 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
 
   /** Write `df` as immutable files under a fresh commit dir; return the
     * created [[TableFile]]s with their partition values. One distributed
-    * write job regardless of partition count. */
+    * write job regardless of partition count.
+    *
+    * Checks ride that job instead of probing ahead of it: when
+    * `constraints` apply to `operation` or the caller passed a `tally`,
+    * one observation sits directly above the write — after the layout
+    * exchange, in the result stage, where Spark folds each task's update
+    * in exactly once — counting the rows written, each constraint's
+    * violations among them and the tally's tags ([[ObservedCounts]]).
+    * Before returning, so before any pointer swap, the commit reads it
+    * back and sweeps the commit dir and fails when the observation
+    * cannot be read, when a written row violates a constraint, or when
+    * the rows counted differ from the row counts the footer-stats pass
+    * read for the new files (a plan that counted other rows than it
+    * wrote); a file without a footer row count skips only that last
+    * comparison. */
   private def writeCommit(df: DataFrame, partitionBy: Seq[String],
       cm: Option[ColumnMapping] = None,
-      preserveLayout: Boolean = false): Seq[TableFile] = {
+      preserveLayout: Boolean = false,
+      constraints: Map[String, String] = Map.empty,
+      operation: String = "write",
+      tally: Option[ObservedCounts] = None): Seq[TableFile] = {
+    val commitDir = new Path(dataDir, UUID.randomUUID().toString)
+    val checks = constraintFlags(constraints, operation)
+    val written = tally.fold(lit(true))(_.written)
+    val tag = tally.map(_.tagCol).toSeq
+    val laid = laidOut(df, partitionBy, preserveLayout, tag)
+    val counters: Seq[(String, Column)] =
+      if (checks.isEmpty && tally.isEmpty) Nil
+      else (ManagedTable.WrittenRowsCounter -> count_if(written)) +:
+        (checks.map { case (n, v) =>
+          s"${ManagedTable.ViolationCounter}$n" -> count_if(written && v) } ++
+          tally.fold(Seq.empty[(String, Column)])(_.counters))
+    val observation = org.apache.spark.sql.Observation()
+    val toWrite =
+      if (counters.isEmpty) laid
+      else {
+        val cols = counters.map { case (n, c) => c.cast("long").as(n) }
+        laid.observe(observation, cols.head, cols.tail: _*)
+          .filter(written).drop(tag: _*)
+      }
     // data files store PHYSICAL column names (no-op while mapping is
     // inactive); stats and bloom sidecars key by them too, so a later
     // rename invalidates nothing
-    val phys = cm.fold(df)(c => df.select(
-      df.columns.toSeq.map(n => col(s"`$n`").as(c.physical(n))): _*))
+    val phys = cm.fold(toWrite)(c => toWrite.select(
+      toWrite.columns.toSeq.map(n => col(s"`$n`").as(c.physical(n))): _*))
     val files = writeCommitFiles(phys, partitionBy.map(c =>
-      cm.fold(c)(_.physical(c))), preserveLayout)
+      cm.fold(c)(_.physical(c))), commitDir)
+    if (counters.nonEmpty) {
+      def fail(e: Exception): Nothing = {
+        try fs.delete(commitDir, true)
+        catch { case scala.util.control.NonFatal(_) => () }
+        throw e
+      }
+      val row =
+        try scala.concurrent.Await.result(observation.future,
+          ManagedTable.ObservationWait)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            fail(new MetadataException(s"$operation on $rootPath: the " +
+              "write's row counts could not be read; nothing was committed", e))
+        }
+      val counts = counters.indices.map(i => counters(i)._1 ->
+        (if (row.isNullAt(i)) 0L else row.getLong(i))).toMap
+      checks.find { case (n, _) =>
+        counts(s"${ManagedTable.ViolationCounter}$n") > 0 }
+        .foreach { case (n, _) => fail(violation(constraints, n, operation)) }
+      val inFiles = files.flatMap(_.rows)
+      val counted = counts(ManagedTable.WrittenRowsCounter)
+      if (inFiles.size == files.size && inFiles.sum != counted)
+        fail(new MetadataException(
+          s"$operation on $rootPath: the write counted $counted rows but " +
+            s"its files hold ${inFiles.sum}; nothing was committed"))
+      tally.foreach(_.complete(counts))
+    }
     // bloom sidecars ride the commit's files (one distributed pass over
     // just-written data, indexed columns only); a failed build degrades
     // to "no sidecar → file kept", so it must never fail the commit
@@ -4962,11 +5040,46 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
       df.hint("rebalance")
     else df
 
+  /** Layout exchange ahead of a commit write. Unpartitioned: the
+    * AQE-sized rebalance (Delta optimized-write's shape for DML) — a
+    * small-delta commit (MERGE/UPDATE/DELETE rewrite, CDC upsert, matview
+    * refresh) otherwise emits one tiny file PER UPSTREAM PARTITION
+    * (measured: 32 sub-64KB files per commit at sf0.1; per-file
+    * open/footer/rename constants dominate the write, and at 100 TB the
+    * same commits bloat the manifest and read-amplify every downstream
+    * scan). REBALANCE is a round-robin exchange AQE resizes to the
+    * advisory partition size at runtime, so small deltas coalesce to a
+    * handful of right-sized files while a genuinely large frame still
+    * writes wide. Skipped when the caller owns the layout (maintenance
+    * rewrites: zorder / cluster / compact pre-sorted their frame); see
+    * [[rebalanced]] for the opt-in.
+    *
+    * Partitioned: optimized write (Delta optimizeWrite equivalent,
+    * opt-in via the graft.write.optimize table property / conf) shuffles
+    * rows onto their partition values before the write, so a commit
+    * produces O(partitions × filesPerPartition) files instead of
+    * O(upstream tasks × partitions) — the classic small-file explosion a
+    * 1000-task job writing 1000 partitions otherwise commits (1M files).
+    * `filesPerPartition > 1` salts the shuffle (a hash of the data
+    * columns, `transport` columns excluded) so one giant partition still
+    * writes in parallel. Opt-in because a caller that pre-clustered its
+    * frame (cluster_by row-group locality) must keep its own layout. */
+  private def laidOut(df: DataFrame, partitionBy: Seq[String],
+      preserveLayout: Boolean, transport: Seq[String]): DataFrame =
+    if (partitionBy.isEmpty) { if (preserveLayout) df else rebalanced(df) }
+    else if (propOrConf("spark.graft.write.optimize", "false").toBoolean) {
+      val saltN = propOrConf("spark.graft.write.filesPerPartition", "1").toInt
+      val keys = partitionBy.map(c => col(s"`$c`").cast("string")) ++
+        (if (saltN > 1)
+          Seq(pmod(hash(df.columns.filterNot(transport.contains)
+            .map(c => col(s"`$c`")): _*), lit(saltN)))
+        else Nil)
+      df.repartition(keys: _*)
+    } else df
+
   private def writeCommitFiles(
       df: DataFrame, partitionBy: Seq[String],
-      preserveLayout: Boolean = false): Seq[TableFile] = {
-    val commitId = UUID.randomUUID().toString
-    val commitDir = new Path(dataDir, commitId)
+      commitDir: Path): Seq[TableFile] = {
     val conf = spark.sparkContext.hadoopConfiguration
     // sizes come free with the post-write listing (Delta records
     // AddFile.size the same way): maintenance and streaming admission
@@ -4979,53 +5092,16 @@ final class ManagedTable(spark: SparkSession, val rootPath: String) {
         nullCounts = fm.nulls)
     }
     if (partitionBy.isEmpty) {
-      // AQE-sized rebalance (Delta optimized-write's shape for DML): a
-      // small-delta commit — MERGE/UPDATE/DELETE rewrite, CDC upsert,
-      // matview refresh — otherwise emits one tiny file PER UPSTREAM
-      // PARTITION (measured: 32 sub-64KB files per commit at sf0.1;
-      // per-file open/footer/rename constants dominate the write, and at
-      // 100 TB the same commits bloat the manifest and read-amplify every
-      // downstream scan). REBALANCE is a round-robin exchange AQE resizes
-      // to the advisory partition size at runtime, so small deltas
-      // coalesce to a handful of right-sized files while a genuinely
-      // large frame still writes wide — the shuffle's cost is
-      // proportional to the bytes written, never a scale hazard. Skipped
-      // when the caller owns the layout (maintenance rewrites: zorder /
-      // cluster / compact pre-sorted their frame), when AQE is off (a
-      // blind exchange would fix nothing), or via the
-      // spark.graft.write.rebalance table property / conf escape hatch.
-      val toWrite = if (preserveLayout) df else rebalanced(df)
-      Phase("write")(toWrite.write.options(commitWriteOpts).parquet(commitDir.toString))
+      Phase("write")(df.write.options(commitWriteOpts).parquet(commitDir.toString))
       val listed = Phase("list")(listParquet(commitDir))
       val stats = Phase("footerStats")(
         FileStatistics.forPaths(spark, conf, listed.map(_._1), maxIndexedCols))
       listed.map { case (p, len) => toFile(p, len, Map.empty, stats) }
     } else {
       val dirCols = partitionBy.map(c => s"__gp_$c")
-      val withDirCols0 = partitionBy.zip(dirCols).foldLeft(df) {
+      val withDirCols = partitionBy.zip(dirCols).foldLeft(df) {
         case (d, (c, dc)) => d.withColumn(dc, col(s"`$c`").cast("string"))
       }
-      // optimized write (Delta optimizeWrite equivalent, opt-in via the
-      // graft.write.optimize table property / conf): shuffle rows onto
-      // their partition values before the write, so a commit produces
-      // O(partitions × filesPerPartition) files instead of O(upstream
-      // tasks × partitions) — the classic small-file explosion a
-      // 1000-task job writing 1000 partitions otherwise commits (1M
-      // files). `filesPerPartition > 1` salts the shuffle so one giant
-      // partition still writes in parallel. Opt-in because a caller that
-      // pre-clustered its frame (cluster_by row-group locality) must
-      // keep its own layout.
-      val withDirCols =
-        if (propOrConf("spark.graft.write.optimize", "false").toBoolean) {
-          val saltN = propOrConf(
-            "spark.graft.write.filesPerPartition", "1").toInt
-          val keys = dirCols.map(c => col(s"`$c`")) ++
-            (if (saltN > 1)
-              Seq(pmod(hash(df.columns.map(c => col(s"`$c`")): _*),
-                lit(saltN)))
-            else Nil)
-          withDirCols0.repartition(keys: _*)
-        } else withDirCols0
       Phase("write")(withDirCols.write.options(commitWriteOpts)
         .partitionBy(dirCols: _*).parquet(commitDir.toString))
       val listed = Phase("list")(listParquet(commitDir))
@@ -5484,6 +5560,17 @@ object ManagedTable {
     * cross-process commit race (an orphan record never resolves —
     * retrying forever would hang the writer on operator error). */
   val MaxAppendRetries = 5
+
+  /** Counter names of a commit write's own observation (see
+    * `writeCommit`): rows written, and violations per constraint. */
+  private[tables] val WrittenRowsCounter = "__graft_written"
+  private[tables] val ViolationCounter = "__graft_violates:"
+
+  /** Bound on reading a write's observation back: it arrives through the
+    * session's listener bus once the write returned, and an event the bus
+    * dropped under overload fails the commit instead of hanging it. */
+  private[tables] val ObservationWait =
+    scala.concurrent.duration.Duration(2, "minutes")
 
   /** JVM-global cache of manifest-record file CONTENTS keyed by the
     * record's fully-qualified path. Records are immutable once published

@@ -372,43 +372,35 @@ final class MergeBuilder private[tables] (
             .otherwise(lit(m.version + 1))
             .as(ManagedTable.MatRowCvCol))
       else Nil
-    val resolved = joined
-      .select(outCols ++ matCarry ++ Seq(actionCol.as(ActionCol),
-        when(col(SFlag).isNotNull, col(TRowId)).as(TRowId)): _*)
     // Delta contract: multiple source rows matching one target row is an
     // error, not silent duplication (skipped when the caller asserted
     // key-unique sources — the keyed path's same contract)
     if (!sourceKeysUnique) {
-      val multi = resolved.filter(col(TRowId).isNotNull)
+      val multi = joined.filter(col(SFlag).isNotNull && col(TRowId).isNotNull)
         .groupBy(TRowId).count().filter(col("count") > 1).limit(1).count()
       if (multi > 0)
         throw new graft.metadata.MetadataException(
           "MERGE source has multiple rows matching one target row")
     }
-    // action counts ride the write itself, observed before the drop/delete
-    // filter: the resolve runs ONCE, and the counts describe exactly the
-    // rows that evaluation wrote (self-consistent under nondeterministic
-    // clause conditions, nothing persisted)
+    // the commit gets every tagged row, deletes and drops included, and
+    // counts the tags on its own write job (ObservedCounts): the resolve
+    // runs ONCE, and the counts describe exactly the rows that evaluation
+    // wrote (self-consistent under nondeterministic clause conditions,
+    // nothing persisted)
+    val resolved = joined
+      .select(outCols ++ matCarry :+ actionCol.as(ActionCol): _*)
     val tally = actionTally(indexed.map { case (c, i) => tagFor(c, tag(i, c)) })
-    val kept = tally.attach(resolved)
-      .filter(col(ActionCol) =!= DropTag && !col(ActionCol).startsWith(DeletePrefix))
-      .drop(ActionCol, TRowId)
     table.replacePartitions(pruned.filter(_ => m.partitionColumns.nonEmpty),
-      kept, operationName, txn, writtenRows = Some(() => writtenTotal(tally)))
+      resolved, operationName, txn, Some(tally))
     MergeMetrics(nonZero(tally.values) - DropTag)
   }
 
-  /** One `count_if` per action tag (plus `unchanged` and `drop`), to ride
-    * the commit's write job ([[ObservedCounts]]). */
+  /** One `count_if` per action tag (plus `unchanged` and `drop`) over
+    * [[ActionCol]]; the commit writes every row but `drop` and `del:*`. */
   private def actionTally(clauseTags: Seq[String]): ObservedCounts =
-    new ObservedCounts((clauseTags ++ Seq(UnchangedTag, DropTag)).distinct
-      .map(t => t -> count_if(col(ActionCol) === lit(t))))
-
-  /** Rows the tallied frame wrote: every tag but `drop` and `del:*`. */
-  private def writtenTotal(tally: ObservedCounts): Long =
-    tally.values.collect {
-      case (t, n) if t != DropTag && !t.startsWith(DeletePrefix) => n
-    }.sum
+    new ObservedCounts(ActionCol, clauseTags ++ Seq(UnchangedTag, DropTag),
+      written = col(ActionCol) =!= DropTag &&
+        !col(ActionCol).startsWith(DeletePrefix))
 
   /** Metrics report only the tags a merge produced; `MergeMetrics.count`
     * resolves an absent tag to 0. */
@@ -598,8 +590,8 @@ final class MergeBuilder private[tables] (
       val inserts = source.alias("source")
         .join(matchedKeys, Seq(k), "left_anti")
         .select(insertValueCols :+ insertAction.as(ActionCol): _*)
-      // insert-clause METRICS ride the phase-2 write: the tally observes
-      // the rewrite ∪ inserts union before its drop/delete filter, so the
+      // insert-clause METRICS ride the phase-2 write: the commit counts
+      // the tags of rewrite ∪ inserts on its own write job, so the
       // anti-join runs once, inside the write job, and no count job
       // follows it. Rewrite rows re-resolve phase 1's actions exactly, so
       // matched/by-source/unchanged counts keep coming from the probe.
@@ -611,7 +603,6 @@ final class MergeBuilder private[tables] (
         nonZero((baseCounts.keySet ++ ic.keySet).map(key =>
           key -> (baseCounts.getOrElse(key, 0L) + ic.getOrElse(key, 0L))).toMap)
       }
-      val written = Some(() => writtenTotal(tally))
 
       // ---- phase 2: re-resolve ONLY the touched files (deterministic
       // expressions reproduce phase 1's actions exactly) and commit them
@@ -704,21 +695,16 @@ final class MergeBuilder private[tables] (
           .filter(col(ActionCol) =!= UnchangedTag)
         val classic = joinTarget(readTouched(rewriteEntries))
           .select(outCols ++ matCarry :+ actionCol.as(ActionCol): _*)
-        val kept = tally.attach(
-            classic.unionByName(images).unionByName(insertsAligned))
-          .filter(col(ActionCol) =!= DropTag &&
-            !col(ActionCol).startsWith(DeletePrefix))
-          .drop(ActionCol)
         table.maskAndReplaceFiles(dvEntries, newDead, dropPaths,
-          rewriteEntries.map(_.path), kept, operationName, txn, written)
+          rewriteEntries.map(_.path),
+          classic.unionByName(images).unionByName(insertsAligned),
+          operationName, txn, Some(tally))
       } else {
         val rewrite = joinTarget(readTouched(touchedEntries))
           .select(outCols ++ matCarry :+ actionCol.as(ActionCol): _*)
-        val kept = tally.attach(rewrite.unionByName(insertsAligned))
-          .filter(col(ActionCol) =!= DropTag && !col(ActionCol).startsWith(DeletePrefix))
-          .drop(ActionCol)
-        Phase("mrg:replaceFiles")(table.replaceFiles(touchedPaths, kept,
-          operationName, txn, writtenRows = written))
+        Phase("mrg:replaceFiles")(table.replaceFiles(touchedPaths,
+          rewrite.unionByName(insertsAligned), operationName, txn,
+          tally = Some(tally)))
       }
       MergeMetrics(counts() - DropTag)
     } finally probe.unpersist()

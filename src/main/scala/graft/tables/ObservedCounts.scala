@@ -1,59 +1,40 @@
 package graft.tables
 
-import org.apache.spark.sql.{Column, DataFrame, GraftDmlShim, Observation}
-import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, count_if, lit}
 
-import scala.concurrent.duration._
-
-/** Row counters that ride a commit's own write job (Spark's
-  * `Dataset.observe`): [[attach]] wraps the frame the commit writes, the
-  * write's tasks fold every row into the named aggregates, and [[values]]
-  * reads them back once the write returned. Metrics then cost no Spark
-  * job of their own, and they describe the rows that one evaluation
-  * actually wrote — self-consistent even under nondeterministic
-  * expressions, with nothing persisted.
+/** Per-tag row counters a commit reads off its own write job. The caller
+  * hands [[ManagedTable.replaceFiles]] (or [[ManagedTable.replacePartitions]]
+  * / [[ManagedTable.maskAndReplaceFiles]]) a frame whose rows carry a tag
+  * in `tagCol`, including rows the commit must count but not write
+  * (`written` false: a merge's deletes and dropped inserts). The commit
+  * attaches one `count_if` per tag through Spark's `Dataset.observe`
+  * directly above its write — after identity allocation, generated
+  * columns and any rebalance exchange, so the counters sit in the write's
+  * result stage, where Spark folds each task's update in exactly once —
+  * then drops the unwritten rows and `tagCol` and writes the rest.
   *
-  * The counters arrive through the session's listener bus after the
-  * write's SQL execution ends, so [[values]] is read only after that
-  * write returned (never on an error path: a query that did not run
-  * never reports). The wait is bounded — an event the bus dropped under
-  * overload fails the operation instead of hanging it. Queries the
-  * commit runs BEFORE its write (constraint and identity probes) go
-  * through [[ObservedCounts.unobserved]], so only the write reports. */
-private[graft] final class ObservedCounts(metrics: Seq[(String, Column)]) {
-  require(metrics.nonEmpty, "ObservedCounts needs at least one metric")
-  private val observation = Observation()
+  * The counts then cost no Spark job of their own and describe the rows
+  * that one evaluation wrote, self-consistent under nondeterministic
+  * expressions. The commit reads them back before its pointer swap
+  * (failing with nothing published when they cannot be read), so
+  * [[values]] is set once the commit returned. */
+private[graft] final class ObservedCounts(
+    val tagCol: String,
+    tags: Seq[String],
+    private[tables] val written: Column = lit(true)) {
+  require(tags.nonEmpty, "ObservedCounts needs at least one tag")
 
-  def attach(df: DataFrame): DataFrame = {
-    val cols = metrics.map { case (n, c) => c.cast("long").as(n) }
-    df.observe(observation, cols.head, cols.tail: _*)
-  }
+  private[tables] def counters: Seq[(String, Column)] =
+    tags.distinct.map(t => t -> count_if(col(tagCol) === lit(t)))
 
-  lazy val values: Map[String, Long] = {
-    val row =
-      try scala.concurrent.Await.result(observation.future,
-        ObservedCounts.MaxWait)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          throw new graft.metadata.MetadataException(
-            s"write metrics did not arrive within ${ObservedCounts.MaxWait}")
-      }
-    metrics.indices.map(i => metrics(i)._1 ->
-      (if (row.isNullAt(i)) 0L else row.getLong(i))).toMap
-  }
-}
+  @volatile private var observed: Option[Map[String, Long]] = None
 
-private[graft] object ObservedCounts {
-  private val MaxWait = 2.minutes
+  private[tables] def complete(counts: Map[String, Long]): Unit =
+    observed = Some(tags.distinct.map(t => t -> counts.getOrElse(t, 0L)).toMap)
 
-  /** `df` without observation nodes, for probe queries over a frame a
-    * later write observes: Spark completes an observation with the FIRST
-    * finished query carrying it, and a limit-1 probe would report a
-    * partial count. */
-  def unobserved(df: DataFrame): DataFrame = {
-    val plan = df.queryExecution.logical
-    if (!plan.exists(_.isInstanceOf[CollectMetrics])) df
-    else GraftDmlShim.ofRows(df.sparkSession,
-      plan.transform { case c: CollectMetrics => c.child })
-  }
+  /** Rows per tag, as the commit's write observed them. */
+  def values: Map[String, Long] = observed.getOrElse(
+    throw new IllegalStateException(
+      "row counts are read only after the commit that carried them"))
 }

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.Resolver
 import org.apache.spark.sql.catalyst.expressions.{
   And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{
@@ -46,28 +47,32 @@ object GraftManifestScan {
     * prune (mirrors `PartitioningAwareFileIndex.prunePartitions`).
     * Ignoring `partitionFilters` here is a semantics bug, not a missed
     * optimization: `filter("part = x")` would return every partition.
-    * A filter naming an attribute the partition schema lacks cannot be
-    * evaluated per directory; the dirs then come back unpruned instead
-    * of the bind failing with an index error. The planner hands over
-    * only filters over partition columns, so this is a guard on that
-    * contract, not a pruning path. */
+    * Attributes bind by the session's `resolver` — the planner matched
+    * them to partition columns the same way, case-insensitively unless
+    * `spark.sql.caseSensitive` — and one that still binds to no
+    * partition column fails the scan: returning the dirs unpruned would
+    * return rows no filter ever re-checks. */
   private[sql] def prunePartitions(partitionFilters: Seq[Expression],
       partSchema: StructType,
-      dirs: Seq[PartitionDirectory]): Seq[PartitionDirectory] = {
-    val bound = partitionFilters.forall(_.references.forall(a =>
-      partSchema.fieldNames.contains(a.name)))
-    if (partitionFilters.isEmpty || !bound) dirs
+      dirs: Seq[PartitionDirectory],
+      resolver: Resolver): Seq[PartitionDirectory] =
+    if (partitionFilters.isEmpty) dirs
     else {
       val predicate = Predicate.createInterpreted(
         partitionFilters.reduce(And).transform {
           case a: AttributeReference =>
-            val idx = partSchema.indexWhere(_.name == a.name)
+            val idx = partSchema.indexWhere(f => resolver(f.name, a.name))
+            if (idx < 0)
+              throw new IllegalStateException(
+                s"partition filter on '${a.name}', which is not a partition " +
+                  s"column (${partSchema.fieldNames.mkString(", ")}): the " +
+                  "scan cannot prune by it, and the planner does not " +
+                  "re-apply partition filters after the scan")
             BoundReference(idx, partSchema(idx).dataType, nullable = true)
         })
       predicate.initialize(0)
       dirs.filter(d => predicate.eval(d.values))
     }
-  }
 
   private final class ListedFileIndex(files: Array[FileStatus], tableRoot: Path)
       extends FileIndex {
@@ -125,7 +130,8 @@ object GraftManifestScan {
     override def rootPaths: Seq[Path] = Seq(tableRoot)
     override def listFiles(partitionFilters: Seq[Expression],
         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      prunePartitions(partitionFilters, partSchema, dirs)
+      prunePartitions(partitionFilters, partSchema, dirs,
+        internal.SQLConf.get.resolver)
     override def inputFiles: Array[String] =
       dirs.flatMap(_.files.map(_.getPath.toString)).toArray
     override def refresh(): Unit = ()

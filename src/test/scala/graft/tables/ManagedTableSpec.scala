@@ -829,6 +829,32 @@ class ManagedTableSpec extends AnyFunSuite with Matchers {
     t.read().count() shouldBe 5
   }
 
+  test("CHECK constraints are checked on the write job: an empty write " +
+      "commits, a rejected one leaves no data dir behind") {
+    import spark.implicits._
+    val t = ManagedTable(spark, tmp() + "/chkw")
+    t.overwriteAll(Seq((1, Some(10)), (2, Some(20))).toDF("id", "qty"))
+    t.addConstraint("qty_nonneg", "qty >= 0")
+    def dataDirs: Set[String] =
+      new java.io.File(t.rootPath, "data").list().toSet
+    // an empty write still reports its (zero) counts
+    t.append(Seq.empty[(Int, Option[Int])].toDF("id", "qty"))
+    MergeInto.byKey(t, Seq.empty[(Int, Option[Int])].toDF("id", "qty"), "id")
+      .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
+      .total shouldBe 2L // both rows unchanged
+    t.read().count() shouldBe 2
+    val v = t.currentVersion
+    val before = dataDirs
+    intercept[ConstraintViolationException] {
+      t.append(Seq((3, Some(-3)), (4, Some(4))).toDF("id", "qty"))
+    }.getMessage should include("qty_nonneg")
+    intercept[ConstraintViolationException] {
+      t.overwriteAll(Seq((5, Some(-5))).toDF("id", "qty"))
+    }
+    t.currentVersion shouldBe v
+    dataDirs shouldBe before
+  }
+
   test("merge withSchemaEvolution adopts source-only columns; default ignores them") {
     import spark.implicits._
     val t = ManagedTable(spark, tmp() + "/evo")

@@ -11,9 +11,11 @@ import java.nio.file.Files
 
 /** MERGE metrics read from the commit's own write job: the counts must
   * equal what the commit wrote, as `history()` and a re-read show, on the
-  * generic (partition-granular) and the keyed (file-granular) paths; a
-  * commit whose observed rows disagree with its files publishes nothing;
-  * bloom sidecars build in one job per indexed column. */
+  * generic (partition-granular) and the keyed (file-granular) paths;
+  * CHECK constraints and identity ids apply to exactly the rows written,
+  * also under a nondeterministic condition; a commit whose counted rows
+  * disagree with its files publishes nothing; bloom sidecars build in one
+  * job per indexed column. */
 class MergeMetricsSpec extends AnyFunSuite with Matchers {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -118,8 +120,8 @@ class MergeMetricsSpec extends AnyFunSuite with Matchers {
     } finally spark.conf.unset("spark.graft.write.rebalance")
   }
 
-  test("generic merge on a CHECK-constrained table: the constraint probe " +
-      "does not report the write's counts") {
+  test("generic merge on a CHECK-constrained table: the constraint is " +
+      "checked on the write, the counts hold") {
     val t = target(30)
     t.addConstraint("id_pos", "id > 0")
     val m = MergeInto(t, rows(25 to 40, "s"), "target.id = source.id")
@@ -131,6 +133,68 @@ class MergeMetricsSpec extends AnyFunSuite with Matchers {
     m.count("unchanged") shouldBe 24L
     assertParity(t, m)
   }
+
+  /** `coin(p)`: true with probability `p`, drawn anew on every call (a
+    * seeded `rand()` repeats its draws when a plan re-runs). */
+  def withCoin[T](body: => T): T = {
+    spark.udf.register("coin", udf((p: Double) =>
+      scala.util.Random.nextDouble() < p).asNondeterministic())
+    body
+  }
+
+  test("nondeterministic merge into a CHECK-constrained table: the " +
+      "constraint is checked on the rows the commit writes") (withCoin {
+    val t = target(200)
+    t.addConstraint("name_ok", "name NOT LIKE 'bad%'")
+    def dataDirs: Set[String] =
+      new java.io.File(t.rootPath, "data").list().toSet
+    // a rare violating update: a check that read other rows than the
+    // write would now and then pass a merge that commits violations
+    (1 to 8).foreach { _ =>
+      val v = t.currentVersion
+      val before = dataDirs
+      try
+        MergeInto(t, rows(1 to 200, "bad"), "target.id = source.id")
+          .whenMatchedUpdateAll(Some("coin(0.0035)")).execute()
+      catch {
+        case _: ConstraintViolationException =>
+          t.currentVersion shouldBe v
+          dataDirs shouldBe before // the rejected write's dir is swept
+      }
+      t.read().filter(col("name").startsWith("bad")).count() shouldBe 0L
+    }
+    val v = t.currentVersion
+    intercept[ConstraintViolationException] {
+      MergeInto(t, rows(1 to 200, "bad"), "target.id = source.id")
+        .whenMatchedUpdateAll(Some("rand() < 2.0")).execute()
+    }.getMessage should include("name_ok")
+    t.currentVersion shouldBe v
+    t.read().count() shouldBe 200L
+  })
+
+  test("nondeterministic merge into an identity table: ids go to exactly " +
+      "the rows written") (withCoin {
+    val s = spark
+    import s.implicits._
+    val t = ManagedTable(spark, tmp() + "/ident")
+    t.overwriteAll(Seq.empty[(String, Int)].toDF("name", "qty"))
+    t.addIdentityColumn("id", start = 100L, step = 10L)
+    t.append((1 to 50).map(i => (s"t$i", i)).toDF("name", "qty"))
+    val m = MergeInto(t, (1 to 200).map(i => (s"s$i", i)).toDF("name", "qty"),
+        "target.name = source.name")
+      .whenNotMatchedInsertAll(Some("coin(0.5)"))
+      .execute()
+    val inserted = t.read().filter(col("name").startsWith("s")).count()
+    m.count("nm0") shouldBe inserted
+    assertParity(t, m)
+    val ids = t.read().select("id").collect().map(_.getLong(0)).toSeq
+    ids.size shouldBe 50L + inserted
+    ids.distinct.size shouldBe ids.size
+    // the watermark advanced by exactly the ids the written rows took
+    t.properties("graft.identity.id.next").toLong shouldBe
+      100L + 10L * (50L + inserted)
+    ids.max shouldBe 100L + 10L * (50L + inserted - 1)
+  })
 
   test("keyed merge: insert counts come from the write, drops excluded") {
     spark.conf.set("spark.graft.merge.smallScopeBytes", "0") // force keyed
@@ -151,16 +215,22 @@ class MergeMetricsSpec extends AnyFunSuite with Matchers {
     } finally spark.conf.unset("spark.graft.merge.smallScopeBytes")
   }
 
-  test("a commit whose observed rows disagree with its files publishes " +
+  test("a commit whose counted rows disagree with its files publishes " +
       "nothing") {
     val t = target(12)
     val v0 = t.currentVersion
     val dataDirs = new java.io.File(t.rootPath, "data").list().toSet
+    // a `written` predicate that claims to be deterministic but flips on
+    // every call: the observation counts one answer, the write keeps
+    // rows by the other
+    val flip = udf(() => MergeMetricsSpec.calls.getAndIncrement() % 2 == 0)
+    val tally = new ObservedCounts("tag", Seq("x"), written = flip())
     val e = intercept[graft.metadata.MetadataException] {
-      t.replacePartitions(None, rows(1 to 5, "x"), "merge",
-        writtenRows = Some(() => 6L))
+      t.replacePartitions(None,
+        rows(1 to 5, "x").coalesce(1).withColumn("tag", lit("x")), "merge",
+        tally = Some(tally))
     }
-    e.getMessage should include("observed 6 rows")
+    e.getMessage should include("the write counted")
     t.currentVersion shouldBe v0
     t.read().count() shouldBe 12L
     // the rejected write's commit dir is swept
@@ -193,4 +263,8 @@ class MergeMetricsSpec extends AnyFunSuite with Matchers {
     m.count("nm0") shouldBe 1L
     t.readEquals("id", Seq(301)).count() shouldBe 1L
   }
+}
+
+object MergeMetricsSpec {
+  val calls = new java.util.concurrent.atomic.AtomicLong()
 }
